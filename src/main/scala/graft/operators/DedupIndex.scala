@@ -39,8 +39,10 @@ import graft.functions.DedupOps
   *    BEFORE the merge commit, named by commitId, and readers admit
   *    only files whose commitId is in the TABLE's applied-commit ledger
   *    — a crash before the commit leaves invisible files; the replay
-  *    writes a fresh nonce dir and the duplicate rows collapse in the
-  *    probe's pair-distinct. A crash AFTER the commit loses nothing
+  *    writes a fresh nonce dir, and the duplicate pair rows it yields
+  *    are absorbed by the probe's per-doc `min_by` representative (a
+  *    duplicate carries the identical (dup_lsn, dup_of, agree), so the
+  *    pick is unchanged). A crash AFTER the commit loses nothing
   *    (the rows were written first).
   *
   * Match rule (deliberately non-recursive so a SQL oracle can replay
@@ -244,8 +246,9 @@ object DedupIndex {
     * the folded rows stay ledger-visible), then delete the originals.
     * Also permanently drops crash-replay duplicate rows (distinct).
     * Crash-safe without coordination: a crash after the write leaves
-    * old + new dirs — duplicate rows the probe's pair-distinct absorbs
-    * until the next compaction sweeps them. Returns dirs folded. */
+    * old + new dirs — duplicate pair rows the probe's per-doc `min_by`
+    * representative absorbs until the next compaction sweeps them.
+    * Returns dirs folded. */
   def compact(
       spark: SparkSession, dir: String, applied: Set[String],
       intoCommitId: String, numBuckets: Int = IndexBuckets): Int = {

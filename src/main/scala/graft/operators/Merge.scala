@@ -115,19 +115,22 @@ object Merge {
     * interleaved A/B can switch variants between runs without a JVM
     * restart. */
   private[graft] def defaultVariant: String =
-    sys.props.get("graft.merge.variant")
-      .orElse(sys.env.get("GRAFT_MERGE"))
-      // empty/blank means unset (`export GRAFT_MERGE=` must not kill
-      // every merge); anything else typo'd (GRAFT_MERGE=sjh) must fail
-      // loudly, not run the join plan while the A/B labels its numbers
-      // "shj"
-      .map(_.trim).filter(_.nonEmpty)
-      .map { v =>
-        require(Set("join", "shj", "fold").contains(v),
-          s"unknown merge variant override '$v' (join|shj|fold)")
-        v
-      }
+    envChoice(
+      sys.props.get("graft.merge.variant").orElse(sys.env.get("GRAFT_MERGE")),
+      Seq("join", "shj", "fold"), "merge variant override")
       .getOrElse("join")
+
+  /** A study override's value (`GRAFT_MERGE`, `GRAFT_FOLD`): empty/blank
+    * means unset (`export GRAFT_MERGE=` must not kill every merge);
+    * anything outside `allowed` (GRAFT_MERGE=sjh) fails loudly instead
+    * of running the default plan while the A/B labels its numbers with
+    * the typo. */
+  private[graft] def envChoice(
+      raw: Option[String], allowed: Seq[String], label: String): Option[String] =
+    raw.map(_.trim).filter(_.nonEmpty).map { v =>
+      require(allowed.contains(v), s"unknown $label '$v' (${allowed.mkString("|")})")
+      v
+    }
 
   def apply(
       table: SnapshotTable,

@@ -233,6 +233,13 @@ object MergeOnRead {
     * doc_id, and never covering clean buckets. */
   private val PerBucketPlanLimit = 64
 
+  /** Fold paths the `GRAFT_FOLD` study override may force. */
+  private[graft] val FoldChoices = Seq("agg", "sort", "wa")
+
+  /** The `GRAFT_FOLD` study override, checked by [[Merge.envChoice]]. */
+  private def foldOverride: Option[String] =
+    Merge.envChoice(sys.env.get("GRAFT_FOLD"), FoldChoices, "GRAFT_FOLD")
+
   /** Target rows per bucket-local fold task (scale-adaptive branch
     * sizing — see the group fold in [[foldDirtyBuckets]]). Parameterised
     * for clusters via `graft.fold.rowsPerTask`; the default keeps a
@@ -479,10 +486,10 @@ object MergeOnRead {
     // (plan-gated — the trickle case's precious property); above it the
     // sort path would pay a bucket-keyed exchange + external sort + row
     // codec anyway, and the hash-agg fold beats that by ~2× (BASELINE.md
-    // round-4). GRAFT_FOLD=agg|sort forces either for studies.
+    // round-4). GRAFT_FOLD=agg|sort|wa forces one for studies.
     val payloadFields =
       cur.schema.fields.filterNot(f => Merge.InternalCols.contains(f.name)).toSeq
-    val choice = sys.env.get("GRAFT_FOLD")
+    val choice = foldOverride
       .getOrElse(if (touched.size > PerBucketPlanLimit) "agg" else "sort")
     val useAgg = choice != "sort"
     val folded = choice match {
@@ -491,7 +498,7 @@ object MergeOnRead {
         payloadFields, classified = true)
       case "sort" => foldDirtyBuckets(
         table, cur, touchedBase, cur.deltaFiles, classified = true)
-      case _ => aggLwwViaWinners(
+      case "wa" => aggLwwViaWinners(
         eventsFrame(table, cur, touchedBase, cur.deltaFiles),
         payloadFields, classified = true)
     }
@@ -841,7 +848,7 @@ object MergeOnRead {
     // WHOLE table through a doc_id exchange, so a mostly-CLEAN table
     // (scheduled compact after a trickle) keeps the bucket-local fold,
     // where clean buckets stream by without folding at all.
-    // GRAFT_FOLD=agg|sort forces either (the study knob).
+    // GRAFT_FOLD=agg|sort|wa forces one (the study knob).
     val dirtyFrac =
       cur.deltaFiles.map(_.bucket).distinct.size.toDouble / cur.numBuckets
     // round-6 re-measure: the winner-attach fold (GRAFT_FOLD=wa,
@@ -851,11 +858,11 @@ object MergeOnRead {
     // are narrow enough that two sorts beat an extra scan + join. The
     // one-pass agg stays the mostly-dirty default; wa remains the
     // equivalence-gated study knob (OPTIMIZATION_r06.md).
-    val base = sys.env.get("GRAFT_FOLD")
+    val base = foldOverride
         .getOrElse(if (dirtyFrac >= 0.5) "agg" else "sort") match {
       case "agg"  => resolveViaAgg(table, cur)
       case "sort" => resolve(table)
-      case _      => resolveViaWinners(table, cur)
+      case "wa"   => resolveViaWinners(table, cur)
     }
     val resolved = base
       .filter(

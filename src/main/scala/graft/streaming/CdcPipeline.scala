@@ -308,8 +308,8 @@ final class CdcPipeline(spark: SparkSession, cfg: PipelineConfig) {
     *  - index/roster appends happen HERE, before the merge commit —
     *    they are invisible to probes until the commitId enters the
     *    table's applied ledger, so a crash anywhere in between is healed
-    *    by the replay (duplicate nonce dirs collapse in the probe's
-    *    pair-distinct);
+    *    by the replay (duplicate nonce dirs yield duplicate pair rows,
+    *    which the probe's per-doc `min_by` representative absorbs);
     *  - the flags side dir is STAGED here and published after the
     *    commit, exactly the error-table contract ([[recoverSideTables]]
     *    completes a crashed publish on the ledger-skip path). */

@@ -224,13 +224,27 @@ final class SnapshotTable(val spark: SparkSession, val root: String) {
     readFiles(files, m.schema)
   }
 
-  /** Read an explicit file list under an explicit schema. Older files may
-    * predate a schema evolution; the explicit schema null-fills added
-    * columns and upcasts widened ones per file on read. */
+  /** Read an explicit file list under an explicit schema.
+    *
+    * The manifest is the file list: the scan plans over exactly `files`
+    * ([[ManifestFileIndex]]), so a read never lists, globs or launches a
+    * listing job. A file the manifest names but the filesystem lacks
+    * fails the read; it never quietly returns fewer rows. Older files
+    * may predate a schema evolution; the explicit schema null-fills
+    * added columns and upcasts widened ones per file on read. The data
+    * schema is made nullable, as Spark's file sources do: a file's
+    * columns carry no not-null guarantee. */
   def readFiles(files: Seq[DataFile], schema: StructType): DataFrame =
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(files.map(_.path): _*)
+    else {
+      import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        ManifestFileIndex(files), partitionSchema = new StructType(),
+        dataSchema = schema.toNullable, bucketSpec = None,
+        fileFormat = new ParquetFileFormat(), options = Map.empty)(spark))
+    }
 
   /** Untouched-bucket files carried forward into a child manifest. */
   def filesExcept(m: Manifest, buckets: Set[Int]): Seq[DataFile] =

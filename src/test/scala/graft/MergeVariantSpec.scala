@@ -122,6 +122,19 @@ class MergeVariantSpec extends SparkSpec {
     finally sys.props.remove("graft.merge.variant")
   }
 
+  test("GRAFT_FOLD override: known folds pass, blank is unset, a typo fails fast") {
+    import graft.operators.MergeOnRead.FoldChoices
+    def fold(raw: Option[String]) = Merge.envChoice(raw, FoldChoices, "GRAFT_FOLD")
+    Seq("agg", "sort", "wa").foreach(v => assert(fold(Some(v)).contains(v)))
+    assert(fold(None).isEmpty)
+    assert(fold(Some(" ")).isEmpty)
+    // a typo must not silently run some other fold while a study
+    // labels its numbers with the typo
+    val e = intercept[IllegalArgumentException](fold(Some("srot")))
+    assert(e.getMessage.contains("srot") && e.getMessage.contains("agg|sort|wa"),
+      e.getMessage)
+  }
+
   test("capped-width regime (numBuckets > 4x parallelism): variants still agree") {
     // Above 4·parallelism buckets routeByBucket caps its width below
     // numBuckets, so every write/fold task carries a residue CLASS of
